@@ -138,6 +138,37 @@ class TestZonemapPruningReport:
             ).collect()
         }
 
+    def test_empty_input_keeps_one_row_per_strategy_and_predicate(self, spark):
+        """No rows still yields the fixed 2 x len(predicates) report, with
+        the same columns as a non-empty one and zero counts."""
+        from wicsmmiretl_spark.operators.layout import zonemap_pruning_report
+
+        def report(df):
+            return zonemap_pruning_report(
+                df,
+                cols=["a", "b"],
+                n_files=8,
+                predicates=[("a_band", {"a": (10, 13)}), ("b_band", {"b": (10, 13)})],
+                tiebreak=["tb"],
+            )
+
+        grid = self._grid(spark)
+        empty = report(grid.filter("a < 0"))
+        assert [(f.name, f.dataType) for f in empty.schema] == [
+            (f.name, f.dataType) for f in report(grid).schema
+        ]
+        rows = [r.asDict() for r in empty.collect()]
+        assert [(r["strategy"], r["predicate"]) for r in rows] == [
+            ("linear", "a_band"),
+            ("linear", "b_band"),
+            ("zorder", "a_band"),
+            ("zorder", "b_band"),
+        ]
+        for r in rows:
+            assert r["n_files"] == r["files_read"] == r["files_pruned"] == 0
+            assert r["rows_total"] == r["rows_read"] == 0
+            assert r["prune_fraction"] is None
+
     def test_single_file_baseline_is_legal(self, spark):
         """n_files=1 (the degenerate single-file baseline — legal Spark
         ntile(1)) must produce a valid no-pruning report, not a confusing

@@ -89,6 +89,61 @@ def test_fetch_with_injected_fetcher(spark):
     assert out[1] is not None and out[2] is None
 
 
+_BIG = 2**62 + 1  # exact only if the column never round-trips through float64
+
+
+def _by_id(rows):
+    return {r.wikicaps_id: r.asDict(recursive=True) for r in rows}
+
+
+def test_fetch_keeps_every_input_column(spark):
+    df = spark.createDataFrame(
+        [
+            (1, "http://ok/a", "http://fb/a", ["x", "y"], 1.5, _BIG),
+            (2, "http://missing/b", None, None, None, None),
+            (3, "http://ok/c", "http://fb/c", [], None, -5),
+        ],
+        "wikicaps_id long, url string, fallback_url string, tags array<string>, "
+        "score double, big long",
+    )
+    out = fetch_images(df, fetcher=fake_fetcher)
+    assert out.columns == df.columns + ["content"]
+    assert out.schema.fields[: len(df.columns)] == df.schema.fields
+    got = _by_id(out.collect())
+    assert len(got) == df.count()
+    want = _by_id(df.collect())
+    for k, row in got.items():
+        content = row.pop("content")
+        assert row == want[k]
+        assert (content is None) == (k == 2)  # failed fetch: NULL, row kept
+
+
+def test_transform_keeps_every_input_column(spark):
+    df = spark.createDataFrame(
+        [
+            (1, _img(3), "png", ["a"], None, _BIG),
+            (2, b"garbage-not-an-image", "png", None, "n", None),
+            (3, None, "png", [], None, 7),
+        ],
+        "wikicaps_id long, content binary, format string, tags array<string>, "
+        "note string, big long",
+    )
+    out = apply_image_transformations(df, [ResizeTransformation(16, 16), WebPTransformation()])
+    assert out.columns == df.columns
+    kept = ("wikicaps_id", "tags", "note", "big")
+    assert [f for f in out.schema if f.name in kept] == [f for f in df.schema if f.name in kept]
+    got, want = _by_id(out.collect()), _by_id(df.collect())
+    assert len(got) == len(want)
+    for k, row in got.items():
+        for col in kept:
+            assert row[col] == want[k][col], (k, col)
+    assert RawGrid.decode(bytes(got[1]["content"])).shape[:2] == (14, 16)
+    assert got[1]["format"] == "webp"
+    # a failing row keeps its other columns and its format; content is NULL
+    assert got[2]["content"] is None and got[2]["format"] == "png"
+    assert got[3]["content"] is None and got[3]["format"] == "png"
+
+
 def test_transformations_from_config_rejects_unknown():
     with pytest.raises(ValueError, match="unknown image transformation"):
         transformations_from_config([{"type": "hologram"}])
@@ -157,6 +212,26 @@ def test_pipeline_stage_metrics_observed(spark, caption_fixture, tmp_path):
     pipe.transform()
     t = pipe.stage_metrics["transform"]
     assert t["rows_transformed"] >= t["transform_failures"]
+
+
+def test_pipeline_stages_are_linear_plans(spark, caption_fixture, tmp_path, monkeypatch):
+    """Extract scans the caption list once and neither stage joins: the
+    fetch and transform operators carry every column through, so nothing
+    is joined back and the enrichment subtree is not evaluated twice."""
+    plans: dict[str, str] = {}  # checkpoint stage -> executed plan of what it wrote
+    write = CaptionPipeline._write_ckpt
+
+    def recording(self, df, stage):
+        plans[stage] = df._jdf.queryExecution().executedPlan().toString()
+        return write(self, df, stage)
+
+    monkeypatch.setattr(CaptionPipeline, "_write_ckpt", recording)
+    cfg = _config(caption_fixture, tmp_path / "out4")
+    CaptionPipeline(spark, cfg, fetcher=fake_fetcher, url_builder=_url_from_file).transform()
+    extract, transform = plans["extracted"], plans["transformed"]
+    assert extract.count("FileScan csv") == 1, extract
+    assert "Join" not in extract, extract
+    assert "Join" not in transform, transform
 
 
 def test_pipeline_checkpoint_resume(spark, caption_fixture, tmp_path):

@@ -10,7 +10,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from tools.spread_notes import annotate, bands, label, load_take, main
+from tools.spread_notes import annotate, bands, label, load_take, main, markdown_table
 
 
 def test_bands_over_takes_with_missing_query():
@@ -40,6 +40,19 @@ def test_annotate_flags_no_band_queries():
     assert out["a"]["label"] == "in_band"
     assert out["a"]["vs_median"] == 0.93
     assert out["new_q"]["label"] == "no_band"
+
+
+def test_markdown_table_renders_zero_median_band():
+    """A band whose median is 0 has no vs-median ratio: the table prints
+    '-' for it instead of failing to format None."""
+    out = annotate(
+        {"z": {"n": 2, "min": 0.0, "median": 0.0, "max": 0.0}, "a": {"n": 2, "min": 1.0, "median": 1.5, "max": 2.0}},
+        {"z": 0.5, "a": 1.4},
+    )
+    assert out["z"]["vs_median"] is None
+    md = markdown_table(out, top=10)
+    assert "| z | 0.50 | [0.00, 0.00, 0.00] (n=2) | - | above_band |" in md
+    assert "| a | 1.40 |" in md and "| 0.93 |" in md
 
 
 def test_cli_writes_band_document(tmp_path, capsys):

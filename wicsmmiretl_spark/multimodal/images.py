@@ -4,10 +4,17 @@
 The reference downloads images to local disk in a thread pool
 (utils.py:76-131), transforms them with PIL (transformations/*.py), and
 carries only a path column. Here images are **data**: a ``binary`` column
-flows through the plan, decode/transform/encode run as Arrow-batched
-``mapInPandas`` UDFs, failures become NULLs filtered by anti-join (P7/P8) —
-no shared filesystem required, which is the difference between "works on one
-box" and "works on 1000 executors".
+flows through the plan, fetch/decode/transform/encode run as Arrow-batched
+``mapInArrow``/``mapInPandas`` UDFs, failures become NULL ``content`` that the
+caller drops with ``content IS NOT NULL`` (P7/P8) — no shared filesystem
+required, which is the difference between "works on one box" and "works on
+1000 executors".
+
+The two row-wise stages the pipeline chains, ``fetch_images`` and
+``apply_image_transformations``, pass every input column through untouched
+(Arrow batches in, the same batches out with one column appended or
+replaced), so a caller never joins their output back to their input — such
+a self-join makes Spark evaluate the whole upstream plan once per side.
 
 Codec strategy: PIL is not in this container, so the *Spark-side plumbing*
 (schema, batch shape, partitioning, error paths) is exercised with RawGrid —
@@ -31,6 +38,7 @@ from typing import Callable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -262,31 +270,30 @@ def transformations_from_config(spec: Sequence[dict]) -> list[ImageTransformatio
 def apply_image_transformations(
     df: DataFrame,
     transforms: Sequence[ImageTransformationBase],
-    id_col: str = "wikicaps_id",
     content_col: str = "content",
     format_col: str = "format",
 ) -> DataFrame:
     """E5: fold the transformation chain over a binary image column.
 
-    Arrow-batched mapInPandas; decode → fold → re-encode per row. Errors
-    yield NULL content (the P8 failure-mask shape — filter with
-    ``content IS NOT NULL`` or anti-join on the failure ids).
+    Arrow-batched mapInArrow; decode → fold → re-encode per row. Every
+    column of ``df`` passes through unchanged except ``content_col`` and
+    ``format_col``, which are rewritten in place. Errors yield NULL content
+    with the row's other columns intact (the P8 failure-mask shape — filter
+    with ``content IS NOT NULL``).
     """
     to_webp = any(isinstance(t, WebPTransformation) for t in transforms)
+    retyped = {content_col: BinaryType(), format_col: StringType()}
     schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField(content_col, BinaryType()),
-            StructField(format_col, StringType()),
-        ]
+        [StructField(f.name, retyped[f.name]) if f.name in retyped else f for f in df.schema.fields]
     )
+    content_idx, format_idx = df.columns.index(content_col), df.columns.index(format_col)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # zip over columns, not .iterrows(): iterrows materializes a Series
-        # per row and dominates the batch cost.
-        for pdf in batches:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
             blobs, fmts = [], []
-            for content, fmt in zip(pdf[content_col], pdf[format_col]):
+            for content, fmt in zip(
+                batch.column(content_idx).to_pylist(), batch.column(format_idx).to_pylist()
+            ):
                 try:
                     arr = RawGrid.decode(content)
                     for t in transforms:
@@ -296,11 +303,10 @@ def apply_image_transformations(
                 except Exception:
                     blobs.append(None)
                     fmts.append(fmt)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].values, content_col: blobs, format_col: fmts}
-            )
+            batch = batch.set_column(content_idx, content_col, pa.array(blobs, pa.binary()))
+            yield batch.set_column(format_idx, format_col, pa.array(fmts, pa.string()))
 
-    return df.select(id_col, content_col, format_col).mapInPandas(run, schema)
+    return df.mapInArrow(run, schema)
 
 
 def decode_image_metadata(
@@ -386,7 +392,6 @@ def synth_images(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 def fetch_images(
     df: DataFrame,
     fetcher: Callable[[str, str], bytes | None] | None = None,
-    id_col: str = "wikicaps_id",
     url_col: str = "url",
     fallback_url_col: str | None = "fallback_url",
 ) -> DataFrame:
@@ -395,28 +400,30 @@ def fetch_images(
     Direct-URL then fallback-URL retry, parity with download_wikimedia_img
     (utils.py:76-131: 0.5 s timeout, custom User-Agent, two-stage URL).
     ``fetcher(url, fallback) -> bytes | None`` is injectable so tests run
-    without network; the default uses requests. Failures → NULL content
-    (P7 null-drop shape). Idempotence against an existing sink is an
-    anti-join on ``id_col`` done by the caller (utils.py:84-86 parity).
+    without network; the default uses requests. The output is every column
+    of ``df`` unchanged plus a binary ``content`` column (Arrow-batched
+    mapInArrow). Failures → NULL content (P7 null-drop shape).
+    Idempotence against an existing sink is an anti-join on the id done by
+    the caller (utils.py:84-86 parity).
     """
     real_fetcher = fetcher or _default_fetcher
-    schema = StructType(
-        [StructField(id_col, LongType()), StructField("content", BinaryType())]
-    )
+    schema = StructType(df.schema.fields + [StructField("content", BinaryType())])
+    url_idx = df.columns.index(url_col)
+    fb_idx = df.columns.index(fallback_url_col) if fallback_url_col else None
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            urls = batch.column(url_idx).to_pylist()
+            fbs = batch.column(fb_idx).to_pylist() if fb_idx is not None else [None] * len(urls)
             blobs = []
-            fbs = pdf[fallback_url_col] if fallback_url_col else [None] * len(pdf)
-            for url, fb in zip(pdf[url_col], fbs):
+            for url, fb in zip(urls, fbs):
                 try:
                     blobs.append(real_fetcher(url, fb))
                 except Exception:
                     blobs.append(None)
-            yield pd.DataFrame({id_col: pdf[id_col].values, "content": blobs})
+            yield batch.append_column("content", pa.array(blobs, pa.binary()))
 
-    cols = [id_col, url_col] + ([fallback_url_col] if fallback_url_col else [])
-    return df.select(*cols).mapInPandas(run, schema)
+    return df.mapInArrow(run, schema)
 
 
 def persist_images(

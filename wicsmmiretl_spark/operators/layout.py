@@ -107,7 +107,8 @@ def zonemap_pruning_report(
     layout order; per-file min/max of every predicate column is the
     simulated parquet footer, and a file is READ iff every predicate
     interval overlaps its [min, max]. Each (strategy, predicate) pair
-    yields one report row.
+    yields one report row — also on an empty input, where every count is 0
+    and ``prune_fraction`` is NULL.
 
     Determinism contract (what makes this oracle-checkable): ``ntile``
     over (layout key, *tiebreak) stands in for ``repartitionByRange``,
@@ -155,9 +156,19 @@ def zonemap_pruning_report(
     df = df.select(*keep_cols)
 
     bounds = df.agg(
+        F.count(F.lit(1)).alias("_rows"),
         *[F.min(c).cast("long").alias(f"min_{c}") for c in cols],
         *[F.max(c).cast("long").alias(f"max_{c}") for c in cols],
     ).first()
+    if bounds["_rows"] == 0:
+        # No rows, no files: the grouped report below would have no groups,
+        # so keep the fixed shape of one zero-count row per (strategy,
+        # predicate); there is no prune fraction of zero files.
+        return df.sparkSession.createDataFrame(
+            sorted((s, p, 0, 0, 0, 0, 0, None) for s in ("linear", "zorder") for p, _ in predicates),
+            "strategy string, predicate string, n_files long, files_read long, "
+            "files_pruned long, rows_total long, rows_read long, prune_fraction double",
+        )
     top = (1 << bits) - 1
     ranks = []
     for c in cols:

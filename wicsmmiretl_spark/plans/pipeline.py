@@ -10,6 +10,14 @@ Replicates the reference's pipeline lifecycle Spark-first:
               → success filter (P8 as NOT NULL)      [checkpoint: transformed]
     load:     metadata parquet (S5) + (file, caption) CSV projection (S6)
 
+Each stage is one linear plan with no join: ``fetch_images`` and
+``apply_image_transformations`` carry every input column through and only
+append or rewrite ``content``/``format``, and a failed fetch or transform is
+a NULL ``content`` dropped with ``content IS NOT NULL`` — not an anti-join.
+Joining an operator's output back to its input would make Spark run the
+whole upstream subtree (caption scan, tokenizer enrichment, filters, top-k
+sample) once per join side; the extract plan scans the caption list once.
+
 Differences from the reference, by design:
 * Stages checkpoint to parquet and resume by reading the checkpoint
   (wikicaps_etl_pipeline.py:107,133-137 caching, minus the `_metadata_exists`
@@ -95,14 +103,12 @@ class CaptionPipeline:
                 filtered, self.config.max_samples, ["wikicaps_id"], self.config.seed
             )
 
-        with_urls = self.url_builder(filtered)
-        fetched = fetch_images(with_urls, fetcher=self.fetcher)
-        attached = with_urls.join(fetched, "wikicaps_id", "left")
+        fetched = fetch_images(self.url_builder(filtered), fetcher=self.fetcher)
 
         from pyspark.sql import Observation
 
         obs = Observation("extract")
-        attached = attached.observe(
+        attached = fetched.observe(
             obs,
             F.count(F.lit(1)).alias("rows_after_filter"),
             F.sum(F.col("content").isNull().cast("long")).alias("fetch_failures"),
@@ -122,21 +128,16 @@ class CaptionPipeline:
         if not self.config.transformations:
             return self._write_ckpt(extracted, "transformed")
         images = apply_image_transformations(extracted, self.config.transformations)
-        meta = extracted.drop("content", "format")
 
         from pyspark.sql import Observation
 
         obs = Observation("transform")
-        joined = (
-            meta.join(images, "wikicaps_id", "inner")
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("rows_transformed"),
-                F.sum(F.col("content").isNull().cast("long")).alias("transform_failures"),
-            )
-            .filter(F.col("content").isNotNull())
-        )
-        out = self._write_ckpt(joined, "transformed")
+        ok = images.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows_transformed"),
+            F.sum(F.col("content").isNull().cast("long")).alias("transform_failures"),
+        ).filter(F.col("content").isNotNull())
+        out = self._write_ckpt(ok, "transformed")
         self.stage_metrics["transform"] = obs.get
         return out
 

@@ -8,6 +8,10 @@ runs on local[*] for tests and on a real cluster unchanged:
 * AQE on (dynamic coalesce, skew-join splitting) — the 100 TB path depends on
   runtime re-planning, and it is free at small SF.
 * Arrow enabled for every pandas-UDF boundary (the only Python hot paths).
+* A 1 MB file open cost (``spark.sql.files.openCostInBytes``, Spark's
+  default is 4 MB), the floor of the scan split size: a single few-MB input
+  such as the caption list is split across all local cores instead of two,
+  while at 100 TB the split size is still capped by ``maxPartitionBytes``.
 * UTC session timezone so timestamp semantics match the DuckDB oracle and are
   stable across cluster node timezones.
 """
@@ -34,6 +38,9 @@ _DEFAULTS: dict[str, str] = {
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
+    # Floor of the scan split size (see module docstring): at Spark's 4 MB
+    # a ~5 MB caption list is 2 splits on 4 cores, at 1 MB it is 4.
+    "spark.sql.files.openCostInBytes": str(1024 * 1024),
     # The driver's events.parquet stores TIMESTAMP(NANOS); Spark has no nanos
     # timestamp type, so read as long and rebuild micros in catalog.load_table.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
