@@ -82,12 +82,30 @@ def test_simhash_similar_docs_close(spark):
     assert all(0 <= s < 2**32 for s in sigs.values())
 
 
-def test_cosine_topk_builtin_vs_numpy(spark, sf_dir):
-    emb = load_table(spark, "embeddings", sf_dir)
-    q = emb.filter(F.col("vec_id") < 5)
-    a = sorted(tuple(r) for r in cosine_topk(emb, q, k=3, method="builtin").collect())
-    b = sorted(tuple(r) for r in cosine_topk(emb, q, k=3, method="numpy").collect())
-    assert a == b
+def test_cosine_topk_matches_numpy_brute_force(spark, sf_dir):
+    """Value coverage for cosine_topk: a float64 NumPy brute force (self
+    excluded, cosines rounded to 6dp, ties to the smallest neighbor_id).
+    ``cumsum`` is a sequential left fold, so dot and norms add in the same
+    order as the Spark kernel."""
+    from pathlib import Path
+
+    import numpy as np
+
+    sf = str(Path(sf_dir).with_name("sf0.01"))
+    emb = load_table(spark, "embeddings", sf)
+    rows = emb.select("vec_id", "embedding").collect()
+    ids = np.array([r.vec_id for r in rows], dtype=np.int64)
+    mat = np.array([r.embedding for r in rows], dtype=np.float32).astype(np.float64)
+    norms = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
+    k = 5
+    expect = []
+    for qi in np.flatnonzero(ids < 8):
+        dots = np.cumsum(mat * mat[qi], axis=1)[:, -1]
+        cos = np.round(dots / (norms[qi] * norms), 6)
+        cand = [(-c, int(i)) for c, i in zip(cos, ids) if i != ids[qi]]
+        expect += [(int(ids[qi]), i, -nc) for nc, i in sorted(cand)[:k]]
+    got = cosine_topk(emb, emb.filter(F.col("vec_id") < 8), k=k).collect()
+    assert sorted(tuple(r) for r in got) == sorted(expect)
 
 
 def test_cosine_topk_self_is_excluded_and_sorted(spark, sf_dir):

@@ -502,9 +502,9 @@ class TestKcore:
         dropped endpoint only exposes the next) still converges exactly,
         the fixpoint detected across a probe batch is the single-round
         fixpoint (monotonicity argument in the kcore docstring), and
-        max_rounds stays a PEEL budget — exhaustion before fixpoint
-        raises. Detection may spend up to one extra no-op batch past
-        convergence, so budgets need that slack (the suite's 60 has it)."""
+        max_rounds stays a budget of REMOVING peels — exhaustion before
+        fixpoint raises, while a fixpoint that lands inside the last
+        batch is confirmed by one extra no-op peel instead of raising."""
         from wicsmmiretl_spark.operators.graph import kcore
 
         tri = [(100, 101), (101, 102), (100, 102)]
@@ -515,6 +515,11 @@ class TestKcore:
         df = spark.createDataFrame(edges, "id_a long, id_b long")
         # 3 cascade peels + a no-op confirmation batch fit in 6 peels...
         assert {r.id for r in kcore(df, k=2, max_rounds=6).collect()} == {100, 101, 102}
+        # ...and in 4 (3 removing peels + 1 no-op): the fixpoint lands
+        # inside the last batch, so the budget is not exhausted...
+        assert {r.id for r in kcore(df, k=2, max_rounds=4).collect()} == {100, 101, 102}
+        # ...nor in exactly 3, where the no-op is the confirming peel...
+        assert {r.id for r in kcore(df, k=2, max_rounds=3).collect()} == {100, 101, 102}
         # ...but a 2-peel budget exhausts mid-cascade and must raise.
         with pytest.raises(RuntimeError, match="fixpoint"):
             kcore(df, k=2, max_rounds=2).collect()

@@ -371,6 +371,23 @@ def test_public_api_facade_exports():
     assert len(w.__all__) >= 45
 
 
+def test_package_quickstart_runs(spark, capsys):
+    """The package docstring's Quickstart ``::`` block runs as written."""
+    import textwrap
+
+    import wicsmmiretl_spark as w
+
+    code = textwrap.dedent(w.__doc__.split("Quickstart::", 1)[1])
+    # The snippet's get_spark() re-applies the session defaults; keep the
+    # suite's shuffle width for the tests that follow.
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        exec(compile(code, "<quickstart>", "exec"), {})
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    assert "doc_id" in capsys.readouterr().out
+
+
 def test_asof_join_forward_matches_naive(spark, sf_dir):
     """direction='forward' must pick the EARLIEST right row with
     right.on >= left.on per group (pandas merge_asof forward semantics);

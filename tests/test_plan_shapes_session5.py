@@ -29,9 +29,17 @@ def test_zonemap_report_pins_the_layout_sort(spark):
         predicates=[("a_band", {"a": (2, 5)}), ("b_band", {"b": (2, 5)})],
         tiebreak=["tb"],
     )
-    plan = _plan(df)
-    # The two ntile global sorts run ONCE per strategy when the lazy
-    # checkpoint materializes; the 4 per-predicate report rows must scan
-    # the pinned zone maps (ExistingRDD), not replay the Window.
-    assert "Window" not in plan, plan
-    assert "Scan ExistingRDD" in plan, plan
+    nodes = [line.lstrip(" :+-") for line in _plan(df).splitlines()]
+    # One aggregate (partial + final) computes every (strategy, predicate)
+    # cell, directly over a Union of the two strategies' zone maps...
+    strat_aggs = [i for i, n in enumerate(nodes) if n.startswith("HashAggregate(keys=[strategy")]
+    assert len(strat_aggs) == 2, nodes
+    assert nodes[strat_aggs[-1] + 1] == "Union", nodes
+    assert sum(n == "Union" for n in nodes) == 1, nodes
+    # ...and each strategy's file assignment is ONE distributed ntile: a
+    # per-partition sort feeding its row_number window, never a
+    # single-partition global sort.
+    windows = [i for i, n in enumerate(nodes) if n.startswith("Window [row_number()")]
+    assert len(windows) == 2, nodes
+    assert all(nodes[i + 1].startswith("Sort [_pid") for i in windows), nodes
+    assert not any("SinglePartition" in n for n in nodes), nodes

@@ -130,6 +130,44 @@ def minhash_signatures(
     return staged.select(F.col(id_col), *mins)
 
 
+def _band_rows(sigs: DataFrame, id_col: str, out: str, num_hashes: int, bands: int) -> DataFrame:
+    """MinHash banding: one ``(out, band_idx, band_key)`` row per (doc,
+    band), ``band_key`` the md5 of the band's ``num_hashes // bands``
+    signature minima. Bucket-partitioned and pinned with a lazy
+    ``localCheckpoint``, so every consumer reads one materialization."""
+    rows_per_band = num_hashes // bands
+    band_cols = [
+        F.struct(
+            F.lit(b).alias("band_idx"),
+            F.md5(
+                F.concat_ws(
+                    "|", *[F.col(f"m{b * rows_per_band + r}") for r in range(rows_per_band)]
+                )
+            ).alias("band_key"),
+        )
+        for b in range(bands)
+    ]
+    return (
+        sigs.select(F.col(id_col).alias(out), F.explode(F.array(*band_cols)).alias("band"))
+        .select(out, "band.band_idx", "band.band_key")
+        .repartition("band_idx", "band_key")
+        .localCheckpoint(eager=False)
+    )
+
+
+def _flag_oversized(banded: DataFrame, id_col: str, max_bucket_size: int) -> DataFrame:
+    """``banded`` plus ``_bmin``: the minimum ``id_col`` of the row's
+    bucket when that bucket holds more than ``max_bucket_size`` rows,
+    NULL otherwise. The oversized-bucket table is broadcast-small."""
+    oversized = F.broadcast(
+        banded.groupBy("band_idx", "band_key")
+        .agg(F.count("*").alias("_bsz"), F.min(id_col).alias("_bmin"))
+        .filter(F.col("_bsz") > max_bucket_size)
+        .select("band_idx", "band_key", "_bmin")
+    )
+    return banded.join(oversized, ["band_idx", "band_key"], "left")
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame,
     id_col: str,
@@ -166,30 +204,11 @@ def lsh_candidate_pairs(
     (executor loss forces a job retry, same trade as ``dup_clusters``) but
     is orders of magnitude smaller than the corpus, so it holds at 100 TB.
     """
-    rows_per_band = num_hashes // bands
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band_idx"),
-            F.md5(F.concat_ws("|", *[F.col(f"m{b * rows_per_band + r}") for r in range(rows_per_band)])).alias(
-                "band_key"
-            ),
-        )
-        for b in range(bands)
-    ]
-    banded = signatures.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("band")
-    ).select(id_col, "band.band_idx", "band.band_key")
-    banded = banded.repartition("band_idx", "band_key").localCheckpoint(eager=False)
+    banded = _band_rows(signatures, id_col, id_col, num_hashes, bands)
 
     star = None
     if max_bucket_size is not None:
-        oversized = F.broadcast(
-            banded.groupBy("band_idx", "band_key")
-            .agg(F.count("*").alias("_bsz"), F.min(id_col).alias("_bmin"))
-            .filter(F.col("_bsz") > max_bucket_size)
-            .select("band_idx", "band_key", "_bmin")
-        )
-        flagged = banded.join(oversized, ["band_idx", "band_key"], "left")
+        flagged = _flag_oversized(banded, id_col, max_bucket_size)
         star = flagged.filter(
             F.col("_bmin").isNotNull() & (F.col(id_col) > F.col("_bmin"))
         ).select(
@@ -778,38 +797,10 @@ def lsh_probe_pairs(
     spaces may overlap — the columns are kept separate, no ordering is
     imposed between them.
     """
-    rows_per_band = num_hashes // bands
-
-    def banded(sigs: DataFrame, out: str) -> DataFrame:
-        band_cols = [
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.md5(
-                    F.concat_ws(
-                        "|", *[F.col(f"m{b * rows_per_band + r}") for r in range(rows_per_band)]
-                    )
-                ).alias("band_key"),
-            )
-            for b in range(bands)
-        ]
-        return (
-            sigs.select(F.col(id_col).alias(out), F.explode(F.array(*band_cols)).alias("band"))
-            .select(out, "band.band_idx", "band.band_key")
-            .repartition("band_idx", "band_key")
-            .localCheckpoint(eager=False)
-        )
-
-    idx = banded(index_sigs, "index_id")
-    prb = banded(probe_sigs, "probe_id")
+    idx = _band_rows(index_sigs, id_col, "index_id", num_hashes, bands)
+    prb = _band_rows(probe_sigs, id_col, "probe_id", num_hashes, bands)
     if max_bucket_size is not None:
-        oversized = F.broadcast(
-            idx.groupBy("band_idx", "band_key")
-            .agg(F.count("*").alias("_bsz"), F.min("index_id").alias("_bmin"))
-            .filter(F.col("_bsz") > max_bucket_size)
-            .select("band_idx", "band_key", "_bmin")
-        )
-        flagged = idx.join(oversized, ["band_idx", "band_key"], "left")
-        idx = flagged.select(
+        idx = _flag_oversized(idx, "index_id", max_bucket_size).select(
             F.coalesce("_bmin", "index_id").alias("index_id"),
             "band_idx",
             "band_key",
@@ -847,9 +838,11 @@ def semantic_dedup(
 
     * centroids come from :func:`~wicsmmiretl_spark.operators.similarity.
       kmeans_train` — broadcast-Lloyd, k×dim driver traffic only;
-    * assignment is a map-side broadcast join + grouped min(struct) argmax
-      (one shuffle carrying n rows — identical machinery to ``ivf_topk``);
-    * the τ-compare is a cell-keyed self-join: pair volume is Σ C(|cell|,2),
+    * assignment is :func:`~wicsmmiretl_spark.operators.similarity.
+      kmeans_flat`'s map-side broadcast argmax (no shuffle of payload rows —
+      identical machinery to ``ivf_topk``);
+    * the τ-compare is a cell-keyed self-join
+      (:func:`~wicsmmiretl_spark.operators.similarity.same_cell_pairs`): pair volume is Σ C(|cell|,2),
       bounded by the largest cell, never O(n²) over the corpus. The paper's
       operating point is k large enough that cells hold ~10³-10⁴ vectors
       (k ≈ n / cell_target); at 100 TB you raise ``k``, not the join.
@@ -904,7 +897,11 @@ def semantic_dedup(
     (int), ``keep`` (boolean) — one row per input vector; downstream the
     kept set is ``filter(keep)``.
     """
-    from wicsmmiretl_spark.operators.similarity import kmeans_train, kmeans_two_level
+    from wicsmmiretl_spark.operators.similarity import (
+        kmeans_flat,
+        kmeans_two_level,
+        same_cell_pairs,
+    )
 
     if strategy not in ("flat", "hierarchical", "auto"):
         raise ValueError(
@@ -940,50 +937,18 @@ def semantic_dedup(
     if strategy == "hierarchical":
         assigned = kmeans_two_level(
             embeddings, k=k, iters=iters, id_col=id_col, vec_col=vec_col, seed=seed, n_rows=n
-        ).localCheckpoint(eager=False)
+        )
     else:
-        from wicsmmiretl_spark.operators.similarity import _argmin_cands, _cent_array
-
-        cent = kmeans_train(
+        assigned = kmeans_flat(
             embeddings, k=k, iters=iters, id_col=id_col, vec_col=vec_col, seed=seed
         )
-        v = embeddings.select(
-            F.col(id_col),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-        ).withColumn(
-            "nv", F.sqrt(F.aggregate(F.col("v"), F.lit(0.0), lambda acc, x: acc + x * x))
-        )
-        # Map-side array_min argmax over the broadcast single-row centroid
-        # array (r14): no n×k row expansion, no per-id shuffle of payload
-        # rows — same (-ccos, cell)-ascending pick as the grouped
-        # min(struct) it replaces.
-        assigned = (
-            v.crossJoin(F.broadcast(_cent_array(cent)))
-            .select(
-                F.col(id_col),
-                F.array_min(_argmin_cands(F.col("v"), F.col("nv")))["cell"].alias("cell"),
-                "v",
-                "nv",
-            )
-            # Both the pair join's sides and the final keep join descend from
-            # this one assignment — pin it so the broadcast-argmax runs once.
-            .localCheckpoint(eager=False)
-        )
-    a = assigned.select(
-        F.col("cell"), F.col(id_col).alias("_ida"), F.col("v").alias("va"), F.col("nv").alias("na")
-    )
-    b = assigned.select(
-        F.col("cell"), F.col(id_col).alias("_idb"), F.col("v").alias("vb"), F.col("nv").alias("nb")
-    )
-    pdot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
+    # Both the pair join's sides and the final keep join descend from this
+    # one assignment — pin it so the cell routing runs once.
+    assigned = assigned.localCheckpoint(eager=False)
     dropped = (
-        a.join(b, ["cell"])
-        .filter(F.col("_ida") < F.col("_idb"))
-        .withColumn("cos", F.round(pdot / (F.col("na") * F.col("nb")), 6))
-        .filter(F.col("cos") >= tau)
-        .select(F.col("_idb").alias(id_col))
+        same_cell_pairs(assigned, id_col, "cell")
+        .filter(F.col("cosine") >= tau)
+        .select(F.col("id_b").alias(id_col))
         .distinct()
         .withColumn("_dropped", F.lit(True))
     )

@@ -1031,8 +1031,10 @@ def kcore(
     groupBy) + two left-semi joins back onto the edge set; the fixpoint
     probe is a row count riding the materialization job itself via
     ``Observation`` (the connected-components r9 pattern — one job per
-    probe, no second action). Rounds are bounded by ``max_rounds`` and
-    raise loudly on exhaustion; the edge set only ever shrinks, so
+    probe, no second action). ``max_rounds`` bounds the REMOVING peels:
+    once it is spent, one confirming peel runs — a no-op means the
+    fixpoint landed inside the last batch and the core is returned,
+    anything else raises loudly. The edge set only ever shrinks, so
     per-round cost is non-increasing. Nothing is collected.
 
     r15 loop shape (guide §1.2 step 1, §2.4): peels run in BATCHES of
@@ -1080,13 +1082,12 @@ def kcore(
     e = e0.repartition(loop_parts, "u").localCheckpoint(eager=False)
     peels_done = 0
     while prev_n > 0:
-        if peels_done >= max_rounds:
-            raise RuntimeError(
-                f"kcore: peeling did not reach a fixpoint within max_rounds="
-                f"{max_rounds}; raise max_rounds (each round deletes at least "
-                "one vertex, so rounds are bounded by the peel depth)."
-            )
-        batch = min(_KCORE_PEELS_PER_PROBE, max_rounds - peels_done)
+        # Budget spent: one confirming peel decides. A fixpoint reached
+        # inside the last batch makes it a no-op (converged, return);
+        # otherwise peeling is still removing vertices and the budget is
+        # genuinely exhausted.
+        confirm = peels_done >= max_rounds
+        batch = 1 if confirm else min(_KCORE_PEELS_PER_PROBE, max_rounds - peels_done)
         nxt = e
         for _ in range(batch):
             deg = (
@@ -1108,6 +1109,12 @@ def kcore(
         cur_n = obs.get["n"]
         if cur_n == prev_n:
             break
+        if confirm:
+            raise RuntimeError(
+                f"kcore: peeling did not reach a fixpoint within max_rounds="
+                f"{max_rounds}; raise max_rounds (each round deletes at least "
+                "one vertex, so rounds are bounded by the peel depth)."
+            )
         prev_n = cur_n
     return (
         e.select(F.explode(F.array("u", "v")).alias("id"))

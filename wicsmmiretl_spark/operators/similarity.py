@@ -1,13 +1,16 @@
 """Similarity search over embedding columns (north-star).
 
-Two paths:
+The cosine contract — vectors cast to double, left-fold L2 norm,
+``dot / (‖a‖·‖b‖)`` rounded to 6 dp, nearest centroid by ``(-cos, cell)``
+ascending, centroids as scaled-integer means — lives in ONE place: the
+kernel helpers ``_f64``, ``_dot``, ``_norm``, ``_unit_rows``, ``_cos6``,
+``_argmin_cands`` and ``_centroid_means`` below, which every operator here,
+``dedup.semantic_dedup`` and the suite's compositions call (the DuckDB
+oracles replay the same IEEE operations in the same order).
 
 * ``cosine_topk`` (baseline, exact): broadcast the (small) query set, score
-  every (query, candidate) pair, keep top-k per query. The JVM path uses
-  higher-order array functions (codegen'd, no Python); the numpy path moves
-  each Arrow batch through one matrix multiply and keeps only the per-batch
-  top-k, so the shuffle carries k rows per (query, batch) instead of the full
-  n×q score matrix — that's the 100 TB-safe shape.
+  every (query, candidate) pair with higher-order array functions
+  (codegen'd, no Python), keep top-k per query.
 * ``hyperplane_lsh_topk`` (scale path, approximate): sign-random-projection
   buckets; only same-bucket pairs are scored. Deterministic hyperplanes
   derived from a seed so results are reproducible cluster-wide.
@@ -26,26 +29,145 @@ embeddings) low recall is expected and not a defect: true neighbors sit at
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
-import pandas as pd
-
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
+
+# ---------------------------------------------------------------------------
+# Cosine kernel
+# ---------------------------------------------------------------------------
 
 
-def _cosine_expr(a, b):
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
-    nb = F.sqrt(F.aggregate(F.transform(b, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
-    return dot / (na * nb)
+def _f64(vec) -> Column:
+    """``vec`` (a column or column name) with every element cast to double."""
+    return F.transform(vec, lambda x: x.cast("double"))
+
+
+def _dot(a, b) -> Column:
+    """Left-fold dot product of two double arrays."""
+    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _norm(v) -> Column:
+    """Left-fold L2 norm of a double array (Python twin: :func:`_l2`)."""
+    return F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
+
+
+def _unit_rows(df: DataFrame, id_col: str, vec_col: str, *carry: str) -> DataFrame:
+    """Stage ``(id_col, *carry, v, nv)``: the double-cast vector and its
+    norm, computed once per row so every pair it takes part in pays only
+    the dot product."""
+    return df.select(F.col(id_col), *carry, _f64(vec_col).alias("v")).withColumn(
+        "nv", _norm(F.col("v"))
+    )
+
+
+def _cos6(va, na, vb, nb) -> Column:
+    """Cosine of two staged vectors, ``round(dot / (na * nb), 6)``.
+    Arguments are columns or column names."""
+    na, nb = (F.col(c) if isinstance(c, str) else c for c in (na, nb))
+    return F.round(_dot(va, vb) / (na * nb), 6)
+
+
+def _argmin_cands(vc, nvc, cents: str = "cents", key: str = "cell") -> Column:
+    """Per-row candidate structs ``(-cos6dp, key)`` over the broadcast
+    centroid-struct array ``cents`` (fields ``key``, ``cv``, ``nc``) —
+    ``array_min`` of this is the repo-wide (-cos, cell)-ascending pick
+    (cosine desc, ties to the lowest key), bit-equal to the grouped
+    ``min(struct)`` form it replaces."""
+    return F.transform(
+        F.col(cents),
+        lambda c: F.struct(
+            (-_cos6(vc, nvc, c["cv"], c["nc"])).alias("_negc"), c[key].alias(key)
+        ),
+    )
+
+
+def _centroid_means(assigned: DataFrame, keys: list, scale: int) -> DataFrame:
+    """Scaled-integer Lloyd update: the mean of ``assigned``'s ``v``
+    arrays per ``keys``, one ``(*keys, pos, c)`` row per dimension. Sums
+    of ``round(val*scale)`` bigints are order-independent, so the centroid
+    is bit-identical regardless of partitioning."""
+    return (
+        assigned.select(*keys, F.posexplode("v").alias("pos", "val"))
+        .groupBy(*keys, "pos")
+        .agg(
+            (
+                F.sum(F.round(F.col("val") * scale).cast("long")).cast("double")
+                / F.lit(float(scale))
+                / F.count("*")
+            ).alias("c")
+        )
+    )
+
+
+def _l2(cv: list) -> float:
+    """Bit-exact replica of ``F.sqrt(F.aggregate(cv, 0.0, acc + x*x))``:
+    same left-fold order of IEEE double adds, same sqrt rounding — used
+    when a Python-side centroid list needs the norm the SQL form would
+    compute."""
+    acc = 0.0
+    for x in cv:
+        acc += x * x
+    return math.sqrt(acc)
+
+
+def _collect_cents(rows, key_cols: list):
+    """Assemble collected ``(..keys.., pos, c)`` centroid-dimension rows
+    into sorted ``(*keys, [c_0..c_dim-1])`` tuples. Positions are
+    contiguous per key group by construction (posexplode of a dense
+    fixed-dim array), which is what makes the ``range(len(d))`` indexing
+    total; a ragged or NULL-element embedding upstream would break that
+    invariant, so it is re-checked here with a contract error instead of
+    a bare KeyError (ADVICE r14) — the helper is load-bearing for
+    kmeans_train, kmeans_two_level and pq_train."""
+    by_key: dict = {}
+    for r in rows:
+        key = tuple(r[k] for k in key_cols)
+        by_key.setdefault(key, {})[r["pos"]] = r["c"]
+    for key, d in by_key.items():
+        if len(d) != max(d) + 1:
+            missing = [p for p in range(max(d) + 1) if p not in d]
+            raise ValueError(
+                f"_collect_cents: centroid key {key} is missing dimension "
+                f"positions {missing[:5]} — embeddings must be dense "
+                "fixed-dim arrays with no NULL elements"
+            )
+    return sorted((*k, [d[p] for p in range(len(d))]) for k, d in by_key.items())
+
+
+def _cent_array(cent: DataFrame) -> DataFrame:
+    """Collapse a (cell, cv, nc) centroid table into ONE row holding the
+    array of centroid structs, for broadcast into a map-side argmax
+    (``array_min`` over per-row candidate structs — guide §2.4: the
+    grouped min(struct) argmax's shuffle of n payload rows is removed
+    outright). ``collect_list`` order is irrelevant: min is
+    order-invariant and (-cos, cell) is unique per candidate.
+
+    Degenerate case (ADVICE r14): a no-groupBy agg always returns one
+    row, so an EMPTY centroid table becomes one row with an empty array —
+    the crossJoin then assigns NULL cell/top-2 to every input vector
+    (where the r13 crossJoin-with-empty produced zero rows). Filtered
+    here so empty-centroids again yields an empty result; unreachable
+    from in-repo trainers (empty centroids imply an empty corpus), but
+    simplified_silhouette takes caller-supplied centroids."""
+    return cent.agg(F.collect_list(F.struct("cell", "cv", "nc")).alias("cents")).filter(
+        F.size("cents") > 0
+    )
+
+
+def _assign(v: DataFrame, cent: DataFrame, id_col: str, out: str = "cell") -> DataFrame:
+    """Route each staged ``(id_col, v, nv)`` row to its nearest centroid
+    of the (cell, cv, nc) table ``cent``: a map-side ``array_min`` over the
+    broadcast single-row centroid array — no n×k row expansion, no per-id
+    shuffle of payload rows. Returns ``(id_col, out, v, nv)``."""
+    return v.crossJoin(F.broadcast(_cent_array(cent))).select(
+        F.col(id_col),
+        F.array_min(_argmin_cands(F.col("v"), F.col("nv")))["cell"].alias(out),
+        "v",
+        "nv",
+    )
 
 
 def cosine_topk(
@@ -54,7 +176,6 @@ def cosine_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    method: str = "builtin",
 ) -> DataFrame:
     """Exact brute-force cosine top-k: for each query vector, the k nearest
     candidates (self-matches excluded).
@@ -62,22 +183,12 @@ def cosine_topk(
     Output: query_id, neighbor_id, cosine (rounded 6dp). ``queries`` must be
     broadcast-small (the usual ANN-query shape); candidates stream.
     """
-    if method == "numpy":
-        return _cosine_topk_numpy(embeddings, queries, k, id_col, vec_col)
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("qv"),
-    )
-    c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("cv"),
-    )
+    q = _unit_rows(queries, id_col, vec_col).toDF("query_id", "qv", "nq")
+    c = _unit_rows(embeddings, id_col, vec_col).toDF("neighbor_id", "cv", "nc")
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", F.round(_cosine_expr(F.col("qv"), F.col("cv")), 6))
-        .select("query_id", "neighbor_id", "cosine")
+        .select("query_id", "neighbor_id", _cos6("qv", "nq", "cv", "nc").alias("cosine"))
     )
     # Two-stage top-k (sampling.cap_per_group): stage 1 prunes to k per
     # (query, input partition) — the global top-k is necessarily a subset of
@@ -89,53 +200,6 @@ def cosine_topk(
     return cap_per_group(
         scored, "query_id", k, [F.desc("cosine"), F.asc("neighbor_id")]
     ).select("query_id", "neighbor_id", "cosine")
-
-
-def _cosine_topk_numpy(
-    embeddings: DataFrame, queries: DataFrame, k: int, id_col: str, vec_col: str
-) -> DataFrame:
-    """Arrow-batched matrix-multiply scoring with per-batch top-k pruning."""
-    import numpy as np
-
-    qrows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[id_col] for r in qrows], dtype=np.int64)
-    q_mat = np.array([r[vec_col] for r in qrows], dtype=np.float64)
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-
-    schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField("neighbor_id", LongType()),
-            StructField("cosine", DoubleType()),
-        ]
-    )
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-            scores = q_mat @ mat.T  # (q, batch)
-            out = []
-            for qi in range(len(q_ids)):
-                row = scores[qi]
-                mask = ids != q_ids[qi]
-                cand = np.where(mask)[0]
-                top = cand[np.argsort(-row[cand], kind="stable")[:k]]
-                out.append(
-                    pd.DataFrame(
-                        {"query_id": q_ids[qi], "neighbor_id": ids[top], "cosine": np.round(row[top], 6)}
-                    )
-                )
-            yield pd.concat(out) if out else pd.DataFrame(columns=["query_id", "neighbor_id", "cosine"])
-
-    partial = embeddings.select(id_col, vec_col).mapInPandas(score, schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        partial.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cosine")
-    )
 
 
 def cosine_pairs(
@@ -170,18 +234,12 @@ def cosine_pairs(
             "optionally feeding its candidate pairs back through an exact verify, "
             "or raise max_rows explicitly if you really mean it."
         )
-    v = embeddings.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    ).withColumn(
-        "norm", F.sqrt(F.aggregate(F.col("v"), F.lit(0.0), lambda acc, x: acc + x * x))
-    )
-    a = v.select(F.col(id_col).alias("id_a"), F.col("v").alias("va"), F.col("norm").alias("na"))
-    b = v.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb"), F.col("norm").alias("nb"))
-    dot = F.aggregate(F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+    v = _unit_rows(embeddings, id_col, vec_col)
+    a = v.toDF("id_a", "va", "na")
+    b = v.toDF("id_b", "vb", "nb")
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", F.round(dot / (F.col("na") * F.col("nb")), 6))
+        .withColumn("cosine", _cos6("va", "na", "vb", "nb"))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
@@ -223,7 +281,7 @@ def hyperplane_signature(
         planes.append(row)
 
     sig = None
-    vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    vec = _f64(vec_col)
     for b, row in enumerate(planes):
         coeffs = F.array(*[F.lit(c) for c in row])
         # coalesce: zip_with pads the shorter array with NULL — skip those
@@ -304,105 +362,30 @@ def hyperplane_pairs(
     if target_bucket is not None:
         bits = derived_lsh_bits(embeddings.count(), target_bucket)
     sig = hyperplane_signature(embeddings, id_col, vec_col, bits, seed, dim=dim)
-    v = (
-        embeddings.select(
-            F.col(id_col),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
+    staged = _unit_rows(embeddings, id_col, vec_col).join(sig, id_col)
+    return same_cell_pairs(staged, id_col, "bucket")
+
+
+def same_cell_pairs(staged: DataFrame, id_col: str, cell_col: str) -> DataFrame:
+    """Cosine of every (id_a < id_b) pair of staged ``(id_col, v, nv,
+    cell_col)`` rows — the :func:`kmeans_flat` / :func:`kmeans_two_level`
+    output, or vectors keyed by an LSH bucket — that share ``cell_col``.
+    A ``cell_col`` equi-self-join: pair volume is Σ C(|cell|, 2), bounded
+    by the largest cell, never all-pairs.
+
+    Output: id_a, id_b, cosine (rounded 6dp).
+    """
+
+    def side(i: str, v: str, n: str) -> DataFrame:
+        return staged.select(
+            F.col(cell_col), F.col(id_col).alias(i), F.col("v").alias(v), F.col("nv").alias(n)
         )
-        .withColumn("norm", F.sqrt(F.aggregate(F.col("v"), F.lit(0.0), lambda acc, x: acc + x * x)))
-        .join(sig, id_col)
-    )
-    a = v.select(
-        F.col(id_col).alias("id_a"), F.col("v").alias("va"), F.col("norm").alias("na"), "bucket"
-    )
-    b = v.select(
-        F.col(id_col).alias("id_b"), F.col("v").alias("vb"), F.col("norm").alias("nb"), "bucket"
-    )
-    dot = F.aggregate(F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+
     return (
-        a.join(b, ["bucket"])
+        side("id_a", "va", "na")
+        .join(side("id_b", "vb", "nb"), [cell_col])
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", F.round(dot / (F.col("na") * F.col("nb")), 6))
-        .select("id_a", "id_b", "cosine")
-    )
-
-
-def _l2(cv: list) -> float:
-    """Bit-exact replica of ``F.sqrt(F.aggregate(cv, 0.0, acc + x*x))``:
-    same left-fold order of IEEE double adds, same sqrt rounding — used
-    when a Python-side centroid list needs the norm the SQL form would
-    compute."""
-    acc = 0.0
-    for x in cv:
-        acc += x * x
-    return math.sqrt(acc)
-
-
-def _collect_cents(rows, key_cols: list):
-    """Assemble collected ``(..keys.., pos, c)`` centroid-dimension rows
-    into sorted ``(*keys, [c_0..c_dim-1])`` tuples. Positions are
-    contiguous per key group by construction (posexplode of a dense
-    fixed-dim array), which is what makes the ``range(len(d))`` indexing
-    total; a ragged or NULL-element embedding upstream would break that
-    invariant, so it is re-checked here with a contract error instead of
-    a bare KeyError (ADVICE r14) — the helper is load-bearing for
-    kmeans_train, kmeans_two_level and pq_train."""
-    by_key: dict = {}
-    for r in rows:
-        key = tuple(r[k] for k in key_cols)
-        by_key.setdefault(key, {})[r["pos"]] = r["c"]
-    for key, d in by_key.items():
-        if len(d) != max(d) + 1:
-            missing = [p for p in range(max(d) + 1) if p not in d]
-            raise ValueError(
-                f"_collect_cents: centroid key {key} is missing dimension "
-                f"positions {missing[:5]} — embeddings must be dense "
-                "fixed-dim arrays with no NULL elements"
-            )
-    return sorted((*k, [d[p] for p in range(len(d))]) for k, d in by_key.items())
-
-
-def _cent_array(cent: DataFrame) -> DataFrame:
-    """Collapse a (cell, cv, nc) centroid table into ONE row holding the
-    array of centroid structs, for broadcast into a map-side argmax
-    (``array_min`` over per-row candidate structs — guide §2.4: the
-    grouped min(struct) argmax's shuffle of n payload rows is removed
-    outright). ``collect_list`` order is irrelevant: min is
-    order-invariant and (-cos, cell) is unique per candidate.
-
-    Degenerate case (ADVICE r14): a no-groupBy agg always returns one
-    row, so an EMPTY centroid table becomes one row with an empty array —
-    the crossJoin then assigns NULL cell/top-2 to every input vector
-    (where the r13 crossJoin-with-empty produced zero rows). Filtered
-    here so empty-centroids again yields an empty result; unreachable
-    from in-repo trainers (empty centroids imply an empty corpus), but
-    simplified_silhouette takes caller-supplied centroids."""
-    return cent.agg(F.collect_list(F.struct("cell", "cv", "nc")).alias("cents")).filter(
-        F.size("cents") > 0
-    )
-
-
-def _argmin_cands(vc, nvc):
-    """Per-row candidate structs ``(-cos6dp, cell)`` over the broadcast
-    ``cents`` array — ``array_min`` of this is the repo-wide
-    (-ccos, cell)-ascending pick (cosine desc, ties to the lowest cell),
-    bit-equal to the grouped ``min(struct)`` form it replaces."""
-    return F.transform(
-        F.col("cents"),
-        lambda c: F.struct(
-            (
-                -F.round(
-                    F.aggregate(
-                        F.zip_with(vc, c["cv"], lambda x, y: x * y),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    )
-                    / (nvc * c["nc"]),
-                    6,
-                )
-            ).alias("_negc"),
-            c["cell"].alias("cell"),
-        ),
+        .select("id_a", "id_b", _cos6("va", "na", "vb", "nb").alias("cosine"))
     )
 
 
@@ -452,17 +435,7 @@ def kmeans_train(
     # per Lloyd iteration plus the init job — pinning it makes every
     # iteration read the materialized rows instead of re-deriving the
     # source scan + cast chain (iters+1 upstream replays saved).
-    v = (
-        embeddings.select(
-            F.col(id_col),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-        )
-        .withColumn(
-            "nv",
-            F.sqrt(F.aggregate(F.col("v"), F.lit(0.0), lambda acc, x: acc + x * x)),
-        )
-        .localCheckpoint(eager=False)
-    )
+    v = _unit_rows(embeddings, id_col, vec_col).localCheckpoint(eager=False)
 
     init = (
         v.withColumn(
@@ -483,31 +456,35 @@ def kmeans_train(
         # argmax cosine as a map-side array_min over the broadcast
         # single-row centroid array: no n×k row expansion, no per-id
         # shuffle (``_argmin_cands``' (-ccos, cell)-ascending pick).
-        assigned = (
-            v.crossJoin(F.broadcast(cent_arr))
-            .select(
-                F.array_min(_argmin_cands(F.col("v"), F.col("nv")))["cell"].alias(
-                    "cell"
-                ),
-                "v",
-            )
+        assigned = v.crossJoin(F.broadcast(cent_arr)).select(
+            F.array_min(_argmin_cands(F.col("v"), F.col("nv")))["cell"].alias("cell"), "v"
         )
-        new_flat = assigned.select(
-            "cell", F.posexplode("v").alias("pos", "val")
-        ).groupBy("cell", "pos").agg(
-            (
-                F.sum(F.round(F.col("val") * scale).cast("long")).cast("double")
-                / F.lit(float(scale))
-                / F.count("*")
-            ).alias("c")
-        )
-        cents = _collect_cents(new_flat.collect(), ["cell"])
+        cents = _collect_cents(_centroid_means(assigned, ["cell"], scale).collect(), ["cell"])
 
     return spark.createDataFrame(cents, "cell int, cv array<double>").select(
-        "cell",
-        "cv",
-        F.sqrt(F.aggregate(F.col("cv"), F.lit(0.0), lambda acc, x: acc + x * x)).alias("nc"),
+        "cell", "cv", _norm(F.col("cv")).alias("nc")
     )
+
+
+def kmeans_flat(
+    embeddings: DataFrame,
+    k: int = 8,
+    iters: int = 3,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    seed: int = 42,
+) -> DataFrame:
+    """Flat k-means cell assignment — the one-level twin of
+    :func:`kmeans_two_level`: train ``k`` centroids with
+    :func:`kmeans_train`, then route every vector to its nearest one with
+    the map-side broadcast argmax (the "assign once more after the last
+    update" contract). Same input precondition: one row per ``id_col``.
+
+    Output: (``id_col``, cell int, v array<double>, nv double) — one row
+    per input vector, ``cell`` in kmeans_train's 1..k numbering.
+    """
+    cent = kmeans_train(embeddings, k=k, iters=iters, id_col=id_col, vec_col=vec_col, seed=seed)
+    return _assign(_unit_rows(embeddings, id_col, vec_col), cent, id_col)
 
 
 def kmeans_two_level(
@@ -654,31 +631,11 @@ def kmeans_two_level(
         embeddings, k=k1, iters=iters, id_col=id_col, vec_col=vec_col, seed=seed, scale=scale
     )
 
-    v = (
-        embeddings.select(
-            F.col(id_col),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-        )
-        .withColumn(
-            "nv",
-            F.sqrt(F.aggregate(F.col("v"), F.lit(0.0), lambda acc, x: acc + x * x)),
-        )
-        .localCheckpoint(eager=False)
-    )
+    v = _unit_rows(embeddings, id_col, vec_col).localCheckpoint(eager=False)
     # Coarse routing: map-side array_min over the broadcast single-row
-    # centroid array (r14) — no n×k1 row expansion and no per-id shuffle
-    # of the payload rows; (-ccos, cell) ascending == cosine desc, ties
+    # centroid array (r14); (-ccos, cell) ascending == cosine desc, ties
     # to the lowest cell, the repo-wide convention.
-    va = (
-        v.crossJoin(F.broadcast(_cent_array(coarse)))
-        .select(
-            F.col(id_col),
-            F.array_min(_argmin_cands(F.col("v"), F.col("nv")))["cell"].alias("cc"),
-            "v",
-            "nv",
-        )
-        .localCheckpoint(eager=False)
-    )
+    va = _assign(v, coarse, id_col, out="cc").localCheckpoint(eager=False)
 
     va_r = va.withColumn(
         "_r",
@@ -769,67 +726,25 @@ def kmeans_two_level(
         # n payload rows is gone. (-ccos, j) ascending is the same pick
         # as the grouped min(struct) it replaces (j unique per cc).
         cent_cc = cent.groupBy("cc").agg(
-            F.collect_list(
-                F.struct(
-                    "j",
-                    "cv",
-                    F.sqrt(
-                        F.aggregate(F.col("cv"), F.lit(0.0), lambda acc, x: acc + x * x)
-                    ).alias("nc"),
-                )
-            ).alias("_fc")
+            F.collect_list(F.struct("j", "cv", _norm(F.col("cv")).alias("nc"))).alias("_fc")
         )
-        fcands = F.transform(
-            F.col("_fc"),
-            lambda c: F.struct(
-                (
-                    -F.round(
-                        F.aggregate(
-                            F.zip_with("v", c["cv"], lambda x, y: x * y),
-                            F.lit(0.0),
-                            lambda acc, x: acc + x,
-                        )
-                        / (F.col("nv") * c["nc"]),
-                        6,
-                    )
-                ).alias("_negc"),
-                c["j"].alias("j"),
-            ),
-        )
-        assigned = (
-            va.join(F.broadcast(cent_cc) if bcast else cent_cc, "cc")
-            .select(
-                F.col(id_col),
-                "cc",
-                "v",
-                "nv",
-                F.array_min(fcands)["j"].alias("_j"),
-            )
+        fcands = _argmin_cands(F.col("v"), F.col("nv"), cents="_fc", key="j")
+        assigned = va.join(F.broadcast(cent_cc) if bcast else cent_cc, "cc").select(
+            F.col(id_col), "cc", "v", "nv", F.array_min(fcands)["j"].alias("j")
         )
         if it == iters:
             # Final routing with the post-update centroids — the same
-            # "assign once more after the last update" contract as the
-            # flat semantic_dedup chain.
+            # "assign once more after the last update" contract as
+            # kmeans_flat.
             # kmeans_train numbers coarse cells 1..k1 — shift to 0-based
             # before packing so cell ids land in [0, k1·k2).
             return assigned.select(
                 F.col(id_col),
-                ((F.col("cc") - 1) * k2 + F.col("_j")).alias("cell"),
+                ((F.col("cc") - 1) * k2 + F.col("j")).alias("cell"),
                 "v",
                 "nv",
             )
-        new_flat = (
-            assigned.select("cc", F.col("_j").alias("j"), F.posexplode("v").alias("pos", "val"))
-            .groupBy("cc", "j", "pos")
-            .agg(
-                (
-                    F.sum(F.round(F.col("val") * scale).cast("long")).cast("double")
-                    / F.lit(float(scale))
-                    / F.count("*")
-                ).alias("c")
-            )
-        )
-        new_cent = new_flat.groupBy("cc", "j").agg(
+        new_cent = _centroid_means(assigned, ["cc", "j"], scale).groupBy("cc", "j").agg(
             F.array_sort(F.collect_list(F.struct("pos", "c")))["c"].alias("cv")
         )
         cent = new_cent.localCheckpoint(eager=False)
@@ -874,10 +789,7 @@ def ivf_topk(
 
     Output: query_id, neighbor_id, cosine (rounded 6dp).
     """
-    v = embeddings.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    ).withColumn("nv", F.sqrt(F.aggregate(F.col("v"), F.lit(0.0), lambda acc, x: acc + x * x)))
+    v = _unit_rows(embeddings, id_col, vec_col)
 
     if label_col is None:
         cent = kmeans_train(
@@ -890,24 +802,12 @@ def ivf_topk(
             scale=scale,
         )
     else:
-        flat = embeddings.select(
-            F.col(label_col), F.posexplode(F.col(vec_col)).alias("pos", "val")
-        )
-        cent_flat = flat.groupBy(label_col, "pos").agg(
-            (
-                F.sum(F.round(F.col("val").cast("double") * scale).cast("long")).cast("double")
-                / F.lit(float(scale))
-                / F.count("*")
-            ).alias("c")
-        )
+        labelled = embeddings.select(F.col(label_col).alias("cell"), _f64(vec_col).alias("v"))
         cent = (
-            cent_flat.groupBy(label_col)
+            _centroid_means(labelled, ["cell"], scale)
+            .groupBy("cell")
             .agg(F.array_sort(F.collect_list(F.struct("pos", "c")))["c"].alias("cv"))
-            .select(
-                F.col(label_col).alias("cell"),
-                "cv",
-                F.sqrt(F.aggregate(F.col("cv"), F.lit(0.0), lambda acc, x: acc + x * x)).alias("nc"),
-            )
+            .select("cell", "cv", _norm(F.col("cv")).alias("nc"))
             # The centroid array feeds BOTH the candidate and the query
             # branch — without a pin, this corpus-wide centroid agg runs
             # once per branch. k rows materialize; the corpus stays lazy.
@@ -946,12 +846,11 @@ def ivf_topk(
         )
         .select("query_id", "qv", "nq", F.col("_cand.cell").alias("cell"))
     )
-    dot = F.aggregate(F.zip_with("qv", "cv2", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
         q.join(c, ["cell"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", F.round(dot / (F.col("nq") * F.col("nn")), 6))
+        .withColumn("cosine", _cos6("qv", "nq", "cv2", "nn"))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
         .select("query_id", "neighbor_id", "cosine")
@@ -972,21 +871,16 @@ def hyperplane_lsh_topk(
     bucket. Equi-join on bucket → shuffle by bucket, never all-pairs."""
     sig_c = hyperplane_signature(embeddings, id_col, vec_col, bits, seed, dim=dim)
     sig_q = hyperplane_signature(queries, id_col, vec_col, bits, seed, dim=dim)
-    c = embeddings.join(sig_c, id_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("cv"),
-        "bucket",
+    c = _unit_rows(embeddings.join(sig_c, id_col), id_col, vec_col, "bucket").toDF(
+        "neighbor_id", "bucket", "cv", "nc"
     )
-    q = queries.join(sig_q, id_col).select(
-        F.col(id_col).alias("query_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("qv"),
-        "bucket",
+    q = _unit_rows(queries.join(sig_q, id_col), id_col, vec_col, "bucket").toDF(
+        "query_id", "bucket", "qv", "nq"
     )
     scored = (
         c.join(F.broadcast(q), "bucket")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cosine", F.round(_cosine_expr(F.col("qv"), F.col("cv")), 6))
-        .select("query_id", "neighbor_id", "cosine")
+        .select("query_id", "neighbor_id", _cos6("qv", "nq", "cv", "nc").alias("cosine"))
     )
     # Same two-stage top-k as cosine_topk (sampling.cap_per_group): prune
     # per (query, partition) first, so the final window ranks <= |q|xPxk
@@ -1014,8 +908,8 @@ def knn_classify(
     the smallest label, so the prediction is deterministic cluster-wide.
 
     Scale design: neighbor search is whatever ``cosine_topk`` does (broadcast
-    queries × streamed candidates, per-batch top-k pruning on the numpy
-    path); the label attach joins k·|Q| rows against the embedding table on
+    queries × streamed candidates, per-partition top-k pruning before the
+    final rank); the label attach joins k·|Q| rows against the embedding table on
     its key — with |Q| broadcast-small the join output is tiny, and the vote
     count is a partial-aggregated groupBy over k·|Q| rows. Nothing here is
     O(n²) in the corpus.
@@ -1086,7 +980,7 @@ def pq_train(
         )
         .orderBy("_r")
         .limit(k)
-        .select(F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"))
+        .select(_f64(vec_col).alias("v"))
     )
     cents = [
         (s, i + 1, list(r["v"])[s * sub : (s + 1) * sub])
@@ -1107,30 +1001,16 @@ def pq_train(
             [(s, cs) for s, cs in sorted(by_sub.items())],
             "subspace int, cents array<struct<cell:int,cv:array<double>,nc:double>>",
         )
-        assigned = (
-            v.join(F.broadcast(cent_df), "subspace")
-            .select(
-                "subspace",
-                F.array_min(_argmin_cands(F.col("v"), F.col("nv")))["cell"].alias("cell"),
-                "v",
-            )
+        assigned = v.join(F.broadcast(cent_df), "subspace").select(
+            "subspace",
+            F.array_min(_argmin_cands(F.col("v"), F.col("nv")))["cell"].alias("cell"),
+            "v",
         )
-        new_flat = assigned.select(
-            "subspace", "cell", F.posexplode("v").alias("pos", "val")
-        ).groupBy("subspace", "cell", "pos").agg(
-            (
-                F.sum(F.round(F.col("val") * scale).cast("long")).cast("double")
-                / F.lit(float(scale))
-                / F.count("*")
-            ).alias("c")
-        )
-        cents = _collect_cents(new_flat.collect(), ["subspace", "cell"])
+        keys = ["subspace", "cell"]
+        cents = _collect_cents(_centroid_means(assigned, keys, scale).collect(), keys)
 
     return spark.createDataFrame(cents, "subspace int, cell int, cv array<double>").select(
-        "subspace",
-        "cell",
-        "cv",
-        F.sqrt(F.aggregate(F.col("cv"), F.lit(0.0), lambda acc, x: acc + x * x)).alias("nc"),
+        "subspace", "cell", "cv", _norm(F.col("cv")).alias("nc")
     )
 
 
@@ -1140,9 +1020,7 @@ def _pq_subspace_rows(df: DataFrame, id_col: str, vec_col: str, dim: int, m: int
         *[
             F.struct(
                 F.lit(s).alias("subspace"),
-                F.transform(
-                    F.slice(F.col(vec_col), s * sub + 1, sub), lambda x: x.cast("double")
-                ).alias("v"),
+                _f64(F.slice(F.col(vec_col), s * sub + 1, sub)).alias("v"),
             )
             for s in range(m)
         ]
@@ -1150,9 +1028,7 @@ def _pq_subspace_rows(df: DataFrame, id_col: str, vec_col: str, dim: int, m: int
     return (
         df.select(F.col(id_col), F.explode(slices).alias("x"))
         .select(F.col(id_col), F.col("x.subspace").alias("subspace"), F.col("x.v").alias("v"))
-        .withColumn(
-            "nv", F.sqrt(F.aggregate(F.col("v"), F.lit(0.0), lambda acc, x: acc + x * x))
-        )
+        .withColumn("nv", _norm(F.col("v")))
     )
 
 
@@ -1244,28 +1120,20 @@ def pq_topk(
     queries = embeddings.filter(F.col(id_col) < query_max_id)
     codes = pq_encode(embeddings, codebook, dim=dim, m=m, id_col=id_col, vec_col=vec_col)
 
-    qn = F.sqrt(
-        F.aggregate(
-            F.transform(F.col(vec_col), lambda x: x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x * x,
-        )
+    q = _unit_rows(queries, id_col, vec_col).toDF("query_id", "qv", "nq")
+    qsub = (
+        _pq_subspace_rows(queries, id_col, vec_col, dim, m)
+        .withColumnRenamed(id_col, "query_id")
+        .join(q.select("query_id", F.col("nq").alias("qn")), "query_id")
     )
-    qsub = _pq_subspace_rows(queries, id_col, vec_col, dim, m).join(
-        queries.select(F.col(id_col), qn.alias("qn")), id_col
-    ).withColumnRenamed(id_col, "query_id")
-    qdot = F.aggregate(
-        F.zip_with("v", "cv", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    csq = F.aggregate(F.transform("cv", lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x)
     lut = (
         qsub.join(F.broadcast(codebook), "subspace")
         .select(
             "query_id",
             "subspace",
             "cell",
-            F.round(qdot * scale).cast("long").alias("dot_i"),
-            F.round(csq * scale).cast("long").alias("csq_i"),
+            F.round(_dot("v", "cv") * scale).cast("long").alias("dot_i"),
+            F.round(_dot("cv", "cv") * scale).cast("long").alias("csq_i"),
             "qn",
         )
     )
@@ -1299,22 +1167,14 @@ def pq_topk(
         return top
 
     # Exact re-rank: fetch floats ONLY for shortlisted candidates.
-    c = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("cv_full"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("qv_full"),
-    )
+    c = _unit_rows(embeddings, id_col, vec_col).toDF("neighbor_id", "cv", "nc")
     # Shortlist is |q|*rerank rows — broadcast it against the full vector
     # table so the fetch is a map-side semi-probe, not a shuffle of the
     # corpus.
     exact = (
         c.join(F.broadcast(top), "neighbor_id")
         .join(F.broadcast(q), "query_id")
-        .withColumn("cosine", F.round(_cosine_expr(F.col("qv_full"), F.col("cv_full")), 6))
-        .select("query_id", "neighbor_id", "cosine")
+        .select("query_id", "neighbor_id", _cos6("qv", "nq", "cv", "nc").alias("cosine"))
     )
     order2 = (F.desc("cosine"), F.asc("neighbor_id"))
     w3 = Window.partitionBy("query_id").orderBy(*order2)
@@ -1574,12 +1434,7 @@ def simplified_silhouette(
             "Persist the centroids upstream to avoid the double execution.",
             stacklevel=2,
         )
-    v = embeddings.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    ).withColumn(
-        "nv", F.sqrt(F.aggregate(F.col("v"), F.lit(0.0), lambda acc, x: acc + x * x))
-    )
+    v = _unit_rows(embeddings, id_col, vec_col)
     # Top-2 centroids per vector, fully MAP-side (r14): the k centroids
     # travel as one broadcast array row and each vector sorts its own k
     # candidate structs — no n×k row expansion and no per-id shuffle
@@ -1653,7 +1508,7 @@ def embedding_pair_profile(
             raise ValueError(
                 f"embedding_pair_profile: column {c!r} not in {embeddings.columns}"
             )
-    picked = (
+    ranked = (
         embeddings.filter(F.col(id_col).isNotNull())
         .withColumn(
             "_r",
@@ -1661,27 +1516,12 @@ def embedding_pair_profile(
         )
         .orderBy("_r")
         .limit(sample)
-        .select(
-            F.col(id_col).alias("_id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-        )
-        .withColumn(
-            "nv",
-            F.sqrt(F.aggregate(F.col("v"), F.lit(0.0), lambda acc, x: acc + x * x)),
-        )
-        .localCheckpoint(eager=False)
     )
-    a = picked.select(
-        F.col("_id").alias("id_a"), F.col("v").alias("va"), F.col("nv").alias("na")
-    )
-    b = picked.select(
-        F.col("_id").alias("id_b"), F.col("v").alias("vb"), F.col("nv").alias("nb")
-    )
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
+    picked = _unit_rows(ranked, id_col, vec_col).localCheckpoint(eager=False)
+    a = picked.toDF("id_a", "va", "na")
+    b = picked.toDF("id_b", "vb", "nb")
     width = 2.0 / bins
-    cos = F.round(dot / (F.col("na") * F.col("nb")), 6)
+    cos = _cos6("va", "na", "vb", "nb")
     bin_e = F.least(
         F.floor((cos + 1.0) / width).cast("int"), F.lit(bins - 1)
     )
@@ -1721,9 +1561,7 @@ def sq8_train(
     """
     rows = (
         embeddings.select(
-            F.posexplode(
-                F.transform(F.col(vec_col), lambda x: x.cast("double"))
-            ).alias("pos", "x")
+            F.posexplode(_f64(vec_col)).alias("pos", "x")
         )
         .groupBy("pos")
         .agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
@@ -1819,10 +1657,7 @@ def sq8_topk(
     codes = sq8_encode(embeddings, mins, maxs, id_col=id_col, vec_col=vec_col)
 
     queries = embeddings.filter(F.col(id_col) < query_max_id)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("qv"),
-    )
+    q = _unit_rows(queries, id_col, vec_col).toDF("query_id", "qv", "nq")
     cand = codes.select(
         F.col(id_col).alias("neighbor_id"),
         _sq8_dequant_expr(F.col("codes"), mn_arr, mx_arr).alias("xq"),
@@ -1868,16 +1703,11 @@ def sq8_topk(
     if rerank is None:
         return top
 
-    c_full = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("cv_full"),
-    )
-    q_full = q.withColumnRenamed("qv", "qv_full")
+    c_full = _unit_rows(embeddings, id_col, vec_col).toDF("neighbor_id", "cv", "nc")
     exact = (
         c_full.join(F.broadcast(top), "neighbor_id")
-        .join(F.broadcast(q_full), "query_id")
-        .withColumn("cosine", F.round(_cosine_expr(F.col("qv_full"), F.col("cv_full")), 6))
-        .select("query_id", "neighbor_id", "cosine")
+        .join(F.broadcast(q), "query_id")
+        .select("query_id", "neighbor_id", _cos6("qv", "nq", "cv", "nc").alias("cosine"))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
@@ -2067,9 +1897,7 @@ def embedding_centroid_drift(
     ).alias("_a")
     rows = embeddings.select(
         half,
-        F.posexplode(
-            F.transform(F.col(vec_col), lambda x: x.cast("double"))
-        ).alias("_pos", "_x"),
+        F.posexplode(_f64(vec_col)).alias("_pos", "_x"),
     )
     means = rows.groupBy("_a", "_pos").agg(
         (

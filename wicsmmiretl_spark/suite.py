@@ -2259,17 +2259,15 @@ def q_embedding_vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array-function surface (§2.7 extension): per-vector dimension,
     min/max component, L2 norm — all higher-order array intrinsics, no
     explode and no shuffle."""
-    emb = _t(spark, sf_dir, "embeddings")
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    staged = emb.select(F.col("vec_id"), v.alias("v"))
+    from wicsmmiretl_spark.operators.similarity import _unit_rows
+
+    staged = _unit_rows(_t(spark, sf_dir, "embeddings"), "vec_id", "embedding")
     return staged.select(
         "vec_id",
         F.size("v").cast("long").alias("dim"),
         F.array_min("v").alias("min_v"),
         F.array_max("v").alias("max_v"),
-        F.round(
-            F.sqrt(F.aggregate(F.col("v"), F.lit(0.0), lambda acc, x: acc + x * x)), 6
-        ).alias("l2_norm"),
+        F.round("nv", 6).alias("l2_norm"),
     )
 
 
@@ -9267,19 +9265,15 @@ def q_embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase_negative_samples' random draws are the easy baseline. Same
     broadcast-query brute-force shape as cosine_topk with the label
     anti-predicate pushed into the scan."""
-    from wicsmmiretl_spark.operators.similarity import _cosine_expr
+    from wicsmmiretl_spark.operators.similarity import _cos6, _unit_rows
     from wicsmmiretl_spark.operators.sampling import cap_per_group
 
     emb = _t(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("qlabel"),
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("qv"),
+    q = _unit_rows(emb.filter(F.col("vec_id") < 8), "vec_id", "embedding", "label").toDF(
+        "query_id", "qlabel", "qv", "nq"
     )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("neighbor_label"),
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("cv"),
+    c = _unit_rows(emb, "vec_id", "embedding", "label").toDF(
+        "neighbor_id", "neighbor_label", "cv", "nc"
     )
     scored = (
         c.crossJoin(F.broadcast(q))
@@ -9287,8 +9281,12 @@ def q_embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("neighbor_id") != F.col("query_id"))
             & (F.col("neighbor_label") != F.col("qlabel"))
         )
-        .withColumn("cosine", F.round(_cosine_expr(F.col("qv"), F.col("cv")), 6))
-        .select("query_id", "neighbor_id", "neighbor_label", "cosine")
+        .select(
+            "query_id",
+            "neighbor_id",
+            "neighbor_label",
+            _cos6("qv", "nq", "cv", "nc").alias("cosine"),
+        )
     )
     return cap_per_group(
         scored, "query_id", 5, [F.desc("cosine"), F.asc("neighbor_id")]
